@@ -1,9 +1,15 @@
-"""Arrow-vectorized entropy UDFs over `tokens: array<int32>` columns.
+"""Scalar ``pandas_udf`` entropy columns for the SampEn optimizer and
+the stationarity pipeline.
 
-This is the engine's single JVM→Python boundary for entropy analytics.
-Each UDF is a scalar ``pandas_udf``: one input row = one whole sequence
-(the array layout means a "group" is already colocated in a row —
-**zero shuffle**, unlike a groupBy+applyInPandas formulation of the
+Per-signal projections (SampEn + PermEn points, windowed entropy and
+the other signal kernels) cross the boundary through
+``functions.entropy_arrow.map_signals`` instead.  The UDFs here stay
+because they compose as columns inside one ``ArrowEvalPython`` node:
+``SampleEntropyOp`` evaluates SampEn next to the per-row bootstrap
+(RNG keyed on ``doc_id``), and the stationarity pass fuses its
+transform with the ADF test.  One input row = one whole sequence (the
+array layout means a "group" is already colocated in a row — **zero
+shuffle**, unlike a groupBy+applyInPandas formulation of the
 reference's ``df.groupby(signal_id)`` loops, e.g.
 sample_entropy.py:120, stationarity.py:150).
 
@@ -14,32 +20,20 @@ cacheable and the Python workers stay warm.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
-
-# explicit StructType (not a DDL string): DDL parsing needs an active
-# SparkSession at decoration/import time, which breaks module imports
-_ENTROPY_STRUCT = StructType(
-    [StructField("sampen", DoubleType()), StructField("permen", DoubleType())]
-)
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from eristropy_spark.kernels import adf as adf_kernel
-from eristropy_spark.kernels.permen import permen_many
 from eristropy_spark.kernels.rng import sequence_rng
 from eristropy_spark.kernels.sampen import bootstrap_mse, sampen_se
 from eristropy_spark.kernels.sampen_batch import sampen_many
 
 __all__ = [
     "sampen_udf",
-    "permen_udf",
-    "entropy_struct_udf",
     "sampen_se_udf",
     "bootstrap_mse_udf",
-    "adf_pvalue_udf",
     "make_transform_adf_udf",
 ]
 
@@ -72,55 +66,6 @@ def sampen_udf(
         subset = [seq_list[i] for i in idx]
         out[idx] = sampen_many(subset, key[0], r_v[idx], normalize=key[1])
     return pd.Series(out)
-
-
-@F.pandas_udf(DoubleType())
-def permen_udf(tokens: pd.Series, m: pd.Series, delay: pd.Series) -> pd.Series:
-    """Bandt–Pompe permutation entropy per row (normalized to [0,1]).
-
-    Rows are grouped by (m, delay) so each group runs through the
-    batch-vectorized ``permen_many`` (bit-identical to the scalar
-    kernel); call sites pass literals, so there is one group per batch.
-    """
-    out = np.full(len(tokens), np.nan, dtype=np.float64)
-    m_v, d_v = m.to_numpy(), delay.to_numpy()
-    seq_list = list(tokens)
-    for key in {(int(mi), int(di)) for mi, di in zip(m_v, d_v)}:
-        idx = np.nonzero((m_v == key[0]) & (d_v == key[1]))[0]
-        subset = [seq_list[i] for i in idx]
-        out[idx] = permen_many(subset, key[0], key[1], normalize=True)
-    return pd.Series(out)
-
-
-@F.pandas_udf(_ENTROPY_STRUCT)
-def entropy_struct_udf(
-    tokens: pd.Series,
-    m: pd.Series,
-    r: pd.Series,
-    normalize: pd.Series,
-    permen_m: pd.Series,
-    permen_delay: pd.Series,
-) -> pd.DataFrame:
-    """SampEn + PermEn in ONE UDF — the hot path for entropy_points.
-
-    Chaining two scalar UDFs makes Spark ship the tokens array across
-    the Arrow boundary once per UDF; computing both metrics here halves
-    the transfer and shares the per-row iteration.  Results are
-    bit-identical to sampen_udf/permen_udf (equivalence-tested).
-
-    Contract: ``m`` and ``normalize`` must be literal (batch-constant)
-    columns — every operator call site passes F.lit — because the batch
-    kernel runs one (m, normalize) configuration per call.
-    """
-    n = len(tokens)
-    seq_list = list(tokens)
-    m0 = int(m.iloc[0]) if n else 2
-    nz0 = bool(normalize.iloc[0]) if n else False
-    s_out = sampen_many(seq_list, m0, r.to_numpy(), normalize=nz0)
-    pm0 = int(permen_m.iloc[0]) if n else 3
-    pd0 = int(permen_delay.iloc[0]) if n else 1
-    p_out = permen_many(seq_list, pm0, pd0, normalize=True)
-    return pd.DataFrame({"sampen": s_out, "permen": p_out})
 
 
 @F.pandas_udf(DoubleType())
@@ -184,24 +129,6 @@ def bootstrap_mse_udf(
         )
     return pd.Series(out)
 
-
-@F.pandas_udf(DoubleType())
-def adf_pvalue_udf(tokens: pd.Series) -> pd.Series:
-    """ADF p-value per sequence; estimation failure maps to p=1.0
-    exactly like the reference (stationarity.py:158-163)."""
-    out = np.empty(len(tokens), dtype=np.float64)
-    for i, seq in enumerate(tokens):
-        if seq is None:
-            out[i] = 1.0
-            continue
-        try:
-            out[i] = adf_kernel.adfuller(_as_f8(seq))[1]
-        except (ValueError, np.linalg.LinAlgError):
-            out[i] = 1.0
-    return pd.Series(out)
-
-
-from pyspark.sql.types import ArrayType
 
 _TRANSFORM_ADF_STRUCT = StructType(
     [

@@ -4,8 +4,9 @@ Semantics are identical to :func:`eristropy_spark.kernels.sampen.sampen`
 (equivalence-tested); the difference is purely mechanical: instead of
 one O(n²) loop per sequence, all B sequences of a batch advance through
 the anti-diagonal sweep together as (B, n) matrices, amortizing NumPy
-dispatch overhead ~B-fold.  This is the hot path inside ``sampen_udf``
-— with Numba unavailable (SURVEY.md §7.5), batch vectorization is the
+dispatch overhead ~B-fold.  This is the hot path of the entropy
+projection (``functions.entropy_arrow.entropy_points_arrow``, once per
+Arrow batch) and of ``sampen_udf`` — with Numba unavailable (SURVEY.md §7.5), batch vectorization is the
 NumPy-native answer to the reference's JIT kernels.
 
 Ragged batches are padded with ``+inf``: a padded position never

@@ -8,10 +8,13 @@ own exchange."""
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField
+
+from eristropy_spark.functions.entropy_arrow import map_signals
+from eristropy_spark.kernels.apen import apen, apen_znormed
 
 __all__ = ["apen_points"]
 
@@ -27,38 +30,27 @@ def apen_points(
     """(``*keep_cols``, n, apen) — one row per signal.  ``normalize``
     z-norms each signal first (ddof=1) so ``r`` is in SD units.
     Constant or too-short signals emit NULL apen (never NaN)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-    from eristropy_spark.kernels.apen import apen, apen_znormed
-
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [StructField("n", IntegerType()), StructField("apen", DoubleType())]
-    )
     fn = apen_znormed if normalize else apen
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            vals: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n == 0:
-                    vals.append(None)
-                    continue
-                a = fn(np.asarray(v, dtype=np.float64), m=m, r=r)
-                vals.append(None if math.isnan(a) else a)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(vals, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, [*keep_cols, "n", "apen"])
+    def _kernel(views):
+        ns: list[int] = []
+        vals: list[float | None] = []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            if n == 0:
+                vals.append(None)
+                continue
+            a = fn(np.asarray(v, dtype=np.float64), m=m, r=r)
+            vals.append(None if math.isnan(a) else a)
+        return None, [ns, vals]
 
-    return src.mapInArrow(_compute, schema)
+    return map_signals(
+        df,
+        keep_cols,
+        [StructField("n", IntegerType()), StructField("apen", DoubleType())],
+        _kernel,
+        (array_col,),
+    )

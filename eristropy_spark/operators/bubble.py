@@ -6,10 +6,13 @@ arithmetic only: no tolerance parameter, no normalization pass."""
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField
+
+from eristropy_spark.functions.entropy_arrow import map_signals
+from eristropy_spark.kernels.bubble import bubble_entropy, swap_renyi2
 
 __all__ = ["bubble_points"]
 
@@ -22,53 +25,35 @@ def bubble_points(
 ) -> DataFrame:
     """(``*keep_cols``, n, h_m, h_m1, bubble) — one row per signal.
     Too-short signals (n < m + 1) emit NULLs (never NaN)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-    from eristropy_spark.kernels.bubble import bubble_entropy, swap_renyi2
-
     if m < 2:
         raise ValueError(f"m must be >= 2, got {m}")
 
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+    def _kernel(views):
+        ns, hm, hm1, bb = [], [], [], []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            if n < m + 1:
+                hm.append(None)
+                hm1.append(None)
+                bb.append(None)
+                continue
+            x = np.asarray(v, dtype=np.float64)
+            hm.append(swap_renyi2(x, m))
+            hm1.append(swap_renyi2(x, m + 1))
+            c = bubble_entropy(x, m=m)
+            bb.append(None if math.isnan(c) else c)
+        return None, [ns, hm, hm1, bb]
+
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("n", IntegerType()),
             StructField("h_m", DoubleType()),
             StructField("h_m1", DoubleType()),
             StructField("bubble", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns, hm, hm1, bb = [], [], [], []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < m + 1:
-                    hm.append(None)
-                    hm1.append(None)
-                    bb.append(None)
-                    continue
-                x = np.asarray(v, dtype=np.float64)
-                a = swap_renyi2(x, m)
-                b = swap_renyi2(x, m + 1)
-                hm.append(a)
-                hm1.append(b)
-                c = bubble_entropy(x, m=m)
-                bb.append(None if math.isnan(c) else c)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(hm, type=pa.float64()))
-            arrays.append(pa.array(hm1, type=pa.float64()))
-            arrays.append(pa.array(bb, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "h_m", "h_m1", "bubble"]
-            )
-
-    return src.mapInArrow(_compute, schema)

@@ -48,9 +48,17 @@ __all__ = ["binseg_changepoints", "cusum_changepoints", "page_hinkley", "pettitt
 
 def _floor_round(c: Column, d: int) -> Column:
     """floor(x*10^d + 0.5)/10^d — the engine-portable fixed-grid round
-    (same family as functions/numeric.round6, generalized scale)."""
+    (same family as functions/numeric.round6, generalized scale).
+
+    Spark's ``floor`` returns BIGINT, which saturates at 9.22e18.  Every
+    double with |x·10^d| >= 2^53 is already an integer, so there x·10^d
+    is its own round and passes through unfloored — what a DOUBLE floor
+    (DuckDB's) gives.  Below 2^53, and for NaN, the BIGINT floor stays.
+    """
     s = F.lit(float(10**d))
-    return F.floor(c * s + F.lit(0.5)) / s
+    xs = c * s
+    exact = (F.abs(xs) < F.lit(float(2**53))) | F.isnan(xs)
+    return F.when(exact, F.floor(xs + F.lit(0.5))).otherwise(xs) / s
 
 
 def cusum_changepoints(
@@ -188,84 +196,58 @@ def pettitt(
     import math
 
     import numpy as np
-    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField
 
-    from typing import Iterator
+    from eristropy_spark.functions.entropy_arrow import map_signals
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    def _kernel(views):
+        ns: list[int] = []
+        ks: list[int | None] = []
+        ts: list[int | None] = []
+        us: list[int | None] = []
+        ps: list[float | None] = []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            if n < 2:
+                ks.append(None)
+                ts.append(None)
+                us.append(None)
+                ps.append(None)
+                continue
+            x = np.asarray(v)
+            uniq, inv, counts = np.unique(x, return_inverse=True, return_counts=True)
+            counts = counts.astype(np.int64)
+            cum_less = np.concatenate(([0], np.cumsum(counts)[:-1]))
+            s = 2 * cum_less[inv] - n + counts[inv]
+            u = np.cumsum(s)[:-1]  # t = 1..n-1
+            absu = np.abs(u)
+            t0 = int(np.argmax(absu))  # earliest max (argmax rule)
+            k = int(absu[t0])
+            ks.append(k)
+            ts.append(t0 + 1)
+            us.append(int(u[t0]))
+            # math.exp, not np.exp: the scalar libm call is what the
+            # SQL replay's exp() evaluates; numpy's vectorized exp can
+            # differ in the last ulp
+            ps.append(
+                min(1.0, 2.0 * math.exp(-6.0 * (k * k) / (n**3 + float(n * n))))
+            )
+        return None, [ns, ks, ts, us, ps]
 
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("n", IntegerType()),
             StructField("k_stat", LongType()),
             StructField("t_star", IntegerType()),
             StructField("u_at_t", LongType()),
             StructField("p_approx", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            ks: list[int | None] = []
-            ts: list[int | None] = []
-            us: list[int | None] = []
-            ps: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < 2:
-                    ks.append(None)
-                    ts.append(None)
-                    us.append(None)
-                    ps.append(None)
-                    continue
-                x = np.asarray(v)
-                uniq, inv, counts = np.unique(
-                    x, return_inverse=True, return_counts=True
-                )
-                counts = counts.astype(np.int64)
-                cum_less = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                s = 2 * cum_less[inv] - n + counts[inv]
-                u = np.cumsum(s)[:-1]  # t = 1..n-1
-                absu = np.abs(u)
-                t0 = int(np.argmax(absu))  # earliest max (argmax rule)
-                k = int(absu[t0])
-                ks.append(k)
-                ts.append(t0 + 1)
-                us.append(int(u[t0]))
-                # math.exp, not np.exp: the scalar libm call is what the
-                # SQL replay's exp() evaluates; numpy's vectorized exp can
-                # differ in the last ulp
-                ps.append(
-                    min(
-                        1.0,
-                        2.0 * math.exp(-6.0 * (k * k) / (n**3 + float(n * n))),
-                    )
-                )
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(ks, type=pa.int64()))
-            arrays.append(pa.array(ts, type=pa.int32()))
-            arrays.append(pa.array(us, type=pa.int64()))
-            arrays.append(pa.array(ps, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "k_stat", "t_star", "u_at_t", "p_approx"]
-            )
-
-    return src.mapInArrow(_compute, schema)
 
 
 def binseg_changepoints(

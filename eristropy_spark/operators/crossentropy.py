@@ -33,20 +33,18 @@ as SampEn's O(n²) — cap sequence length upstream via
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
-    StructType,
 )
+
+from eristropy_spark.functions.entropy_arrow import map_signals
 
 __all__ = ["cross_sampen_pairs"]
 
@@ -109,56 +107,39 @@ def cross_sampen_pairs(
         F.col(array_col).alias("_v"),
     )
     pairs = a.join(b, "key").filter(F.col("src_a") < F.col("src_b"))
-    schema = StructType(
+
+    def _kernel(us, vs):
+        n_a: list[int] = []
+        n_b: list[int] = []
+        bc: list[int] = []
+        ac: list[int] = []
+        cs: list[float | None] = []
+        for u, v in zip(us, vs):
+            nu = 0 if u is None else int(u.size)
+            nv = 0 if v is None else int(v.size)
+            n_a.append(nu)
+            n_b.append(nv)
+            if nu == 0 or nv == 0:
+                bc.append(0)
+                ac.append(0)
+                cs.append(None)
+                continue
+            b_cnt, a_cnt, cse = cross_sampen_kernel(u, v, m, r)
+            bc.append(b_cnt)
+            ac.append(a_cnt)
+            cs.append(cse)
+        return None, [n_a, n_b, bc, ac, cs]
+
+    return map_signals(
+        pairs,
+        ("key", "src_a", "src_b"),
         [
-            StructField("key", StringType()),
-            StructField("src_a", StringType()),
-            StructField("src_b", StringType()),
             StructField("n_a", IntegerType()),
             StructField("n_b", IntegerType()),
             StructField("b_cnt", LongType()),
             StructField("a_cnt", LongType()),
             StructField("cse", DoubleType()),
-        ]
+        ],
+        _kernel,
+        ("_u", "_v"),
     )
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            us = _token_views(batch.column("_u"))
-            vs = _token_views(batch.column("_v"))
-            n_a: list[int] = []
-            n_b: list[int] = []
-            bc: list[int] = []
-            ac: list[int] = []
-            cs: list[float | None] = []
-            for u, v in zip(us, vs):
-                nu = 0 if u is None else int(u.size)
-                nv = 0 if v is None else int(v.size)
-                n_a.append(nu)
-                n_b.append(nv)
-                if nu == 0 or nv == 0:
-                    bc.append(0)
-                    ac.append(0)
-                    cs.append(None)
-                    continue
-                b_cnt, a_cnt, cse = cross_sampen_kernel(u, v, m, r)
-                bc.append(b_cnt)
-                ac.append(a_cnt)
-                cs.append(cse)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("key"),
-                    batch.column("src_a"),
-                    batch.column("src_b"),
-                    pa.array(n_a, type=pa.int32()),
-                    pa.array(n_b, type=pa.int32()),
-                    pa.array(bc, type=pa.int64()),
-                    pa.array(ac, type=pa.int64()),
-                    pa.array(cs, type=pa.float64()),
-                ],
-                ["key", "src_a", "src_b", "n_a", "n_b", "b_cnt", "a_cnt", "cse"],
-            )
-
-    return pairs.mapInArrow(_compute, schema)

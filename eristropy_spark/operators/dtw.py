@@ -41,20 +41,17 @@ longer L.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
-    StructType,
 )
+
+from eristropy_spark.functions.entropy_arrow import map_signals
 
 __all__ = ["dtw_kernel", "dtw_pairs"]
 
@@ -136,47 +133,31 @@ def dtw_pairs(
         trunc.alias("_v"),
     )
     pairs = a.join(b, "key").filter(F.col("src_a") < F.col("src_b"))
-    schema = StructType(
+
+    def _kernel(us, vs):
+        n_a: list[int] = []
+        n_b: list[int] = []
+        ds: list[int | None] = []
+        norms: list[float | None] = []
+        for u, v in zip(us, vs):
+            nu = 0 if u is None else int(u.size)
+            nv = 0 if v is None else int(v.size)
+            n_a.append(nu)
+            n_b.append(nv)
+            d = None if nu == 0 or nv == 0 else dtw_kernel(u, v, band)
+            ds.append(d)
+            norms.append(None if d is None else d / (nu + nv))
+        return None, [n_a, n_b, ds, norms]
+
+    return map_signals(
+        pairs,
+        ("key", "src_a", "src_b"),
         [
-            StructField("key", StringType()),
-            StructField("src_a", StringType()),
-            StructField("src_b", StringType()),
             StructField("n_a", IntegerType()),
             StructField("n_b", IntegerType()),
             StructField("dtw", LongType()),
             StructField("dtw_norm", DoubleType()),
-        ]
+        ],
+        _kernel,
+        ("_u", "_v"),
     )
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            us = _token_views(batch.column("_u"))
-            vs = _token_views(batch.column("_v"))
-            n_a: list[int] = []
-            n_b: list[int] = []
-            ds: list[int | None] = []
-            norms: list[float | None] = []
-            for u, v in zip(us, vs):
-                nu = 0 if u is None else int(u.size)
-                nv = 0 if v is None else int(v.size)
-                n_a.append(nu)
-                n_b.append(nv)
-                d = None if nu == 0 or nv == 0 else dtw_kernel(u, v, band)
-                ds.append(d)
-                norms.append(None if d is None else d / (nu + nv))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("key"),
-                    batch.column("src_a"),
-                    batch.column("src_b"),
-                    pa.array(n_a, type=pa.int32()),
-                    pa.array(n_b, type=pa.int32()),
-                    pa.array(ds, type=pa.int64()),
-                    pa.array(norms, type=pa.float64()),
-                ],
-                ["key", "src_a", "src_b", "n_a", "n_b", "dtw", "dtw_norm"],
-            )
-
-    return pairs.mapInArrow(_compute, schema)

@@ -2,24 +2,20 @@
 
 Reference parity: the final pass of
 ``SampleEntropy.compute_all_sampen`` (sample_entropy.py:346-402) —
-one output row per signal with ``sampen`` (and optionally
-``se_sampen``) — plus PermEn, which the reference advertises but never
-shipped (SURVEY.md §2.6 E16).
+one output row per signal with ``sampen`` — plus PermEn, which the
+reference advertises but never shipped (SURVEY.md §2.6 E16).
 
 Plan shape: a single narrow projection over the token table — each
 sequence is one row, so there is **no shuffle**; the only boundary is
-one Arrow batch hop into the Python worker per partition.
+one Arrow batch hop into the Python worker per partition
+(``functions.entropy_arrow.map_signals``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from eristropy_spark.functions.entropy import (
-    entropy_struct_udf,
-    sampen_se_udf,
-)
+from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
 
 __all__ = ["compute_entropy"]
 
@@ -30,14 +26,10 @@ def compute_entropy(
     r: float = 0.2,
     permen_m: int = 3,
     permen_delay: int = 1,
-    estimate_uncertainty: bool = False,
-    p: float = 0.5,
-    n_boot: int = 100,
-    seed: int = 0,
     keep_cols: tuple[str, ...] = ("source",),
     normalize: bool = False,
 ) -> DataFrame:
-    """(doc_id, [keep_cols...,] sampen, permen[, se_sampen]) per sequence.
+    """(doc_id, [keep_cols...,] sampen, permen) per sequence.
 
     ``r`` is an absolute tolerance on the (float64-cast) token scale,
     matching the reference's convention of applying r to the signal's
@@ -48,28 +40,13 @@ def compute_entropy(
     z-norm (ordinal patterns are order statistics), so it always runs
     on the raw sequence.
     """
-    toks = F.col("tokens").cast("array<double>")
-    ent = entropy_struct_udf(
-        toks,
-        F.lit(m),
-        F.lit(float(r)),
-        F.lit(bool(normalize)),
-        F.lit(permen_m),
-        F.lit(permen_delay),
+    return entropy_points_arrow(
+        tokens_df,
+        m=m,
+        r=r,
+        permen_m=permen_m,
+        permen_delay=permen_delay,
+        normalize=normalize,
+        keep_cols=("doc_id", *keep_cols),
+        ts_col=None,
     )
-    cols = [F.col("doc_id"), *[F.col(c) for c in keep_cols]]
-    cols.append(ent["sampen"].alias("sampen"))
-    cols.append(ent["permen"].alias("permen"))
-    if estimate_uncertainty:
-        cols.append(
-            sampen_se_udf(
-                F.col("doc_id"),
-                toks,
-                F.lit(m),
-                F.lit(float(r)),
-                F.lit(float(p)),
-                F.lit(n_boot),
-                F.lit(seed),
-            ).alias("se_sampen")
-        )
-    return tokens_df.select(*cols)

@@ -29,12 +29,11 @@ one argmax).  Signals with n <= nb pass through unchanged.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField
+
+from eristropy_spark.functions.entropy_arrow import map_signals
 
 __all__ = ["lttb_downsample"]
 
@@ -93,40 +92,28 @@ def lttb_downsample(
     if n_out < 3:
         raise ValueError(f"n_out must be >= 3, got {n_out}")
 
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [StructField("t", IntegerType()), StructField("v", IntegerType())]
-    )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            rep: list[int] = []
-            ts: list[np.ndarray] = []
-            vs: list[np.ndarray] = []
-            for view in views:
-                if view is None or view.size == 0:
-                    rep.append(0)
-                    continue
-                x = np.ascontiguousarray(view, dtype=np.int64)
-                idx = np.asarray(lttb_select(x, n_out), dtype=np.int64)
-                rep.append(idx.size)
-                ts.append((idx + 1).astype(np.int32))
-                vs.append(x[idx].astype(np.int32))
-            if not any(rep):
+    def _kernel(views):
+        rep: list[int] = []
+        ts: list[np.ndarray] = [np.empty(0, dtype=np.int32)]
+        vs: list[np.ndarray] = [np.empty(0, dtype=np.int32)]
+        for view in views:
+            if view is None or view.size == 0:
+                rep.append(0)
                 continue
-            arrays = [
-                batch.column(c).take(
-                    pa.array(np.repeat(np.arange(len(rep)), rep))
-                )
-                for c in keep_cols
-            ]
-            arrays.append(pa.array(np.concatenate(ts), type=pa.int32()))
-            arrays.append(pa.array(np.concatenate(vs), type=pa.int32()))
-            yield pa.RecordBatch.from_arrays(arrays, [*keep_cols, "t", "v"])
+            x = np.ascontiguousarray(view, dtype=np.int64)
+            idx = np.asarray(lttb_select(x, n_out), dtype=np.int64)
+            rep.append(idx.size)
+            ts.append((idx + 1).astype(np.int32))
+            vs.append(x[idx].astype(np.int32))
+        return np.repeat(np.arange(len(rep)), rep), [
+            np.concatenate(ts),
+            np.concatenate(vs),
+        ]
 
-    return src.mapInArrow(_compute, schema)
+    return map_signals(
+        df,
+        keep_cols,
+        [StructField("t", IntegerType()), StructField("v", IntegerType())],
+        _kernel,
+        (array_col,),
+    )

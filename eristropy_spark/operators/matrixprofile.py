@@ -44,12 +44,11 @@ class as SampEn's O(n²); at 100 TB long sequences go through
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField
+
+from eristropy_spark.functions.entropy_arrow import map_signals
 
 __all__ = ["matrix_profile"]
 
@@ -73,90 +72,69 @@ def matrix_profile(
     if sep < 1:
         raise ValueError(f"min_sep must be >= 1, got {min_sep}")
 
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("pos", IntegerType()),
-            StructField("nn_idx", IntegerType()),
-            StructField("dist", DoubleType()),
-        ]
-    )
     wf = float(w)
     two_w = 2.0 * wf
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            rep: list[int] = []  # per-input-row output multiplicity
-            poss: list[np.ndarray] = []
-            nns: list[np.ndarray] = []
-            dss: list[np.ndarray] = []
-            for v in views:
-                if v is None or v.size < w:
-                    rep.append(0)
-                    continue
-                x = np.ascontiguousarray(v, dtype=np.int64)
-                amax = float(np.abs(x).max()) if x.size else 0.0
-                if wf * amax * amax > _EXACT_MAX:
-                    raise ValueError(
-                        "matrix_profile exact-integer protocol needs "
-                        f"w*max(|token|)^2 <= 2^52; got w={w}, "
-                        f"max|token|={amax:.0f} — rescale the tokens or "
-                        "shrink w"
-                    )
-                P = x.size - w + 1
-                A = np.lib.stride_tricks.sliding_window_view(x, w)
-                # exact int64 sufficient statistics
-                T = A @ A.T
-                S = A.sum(axis=1)
-                Q = (A * A).sum(axis=1)
-                varn = w * Q - S * S  # >= 0
-                num = (w * T - np.outer(S, S)).astype(np.float64)
-                vf = varn.astype(np.float64)
-                den = np.sqrt(vf[:, None] * vf[None, :])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    d2 = two_w * (1.0 - num / den)
-                d = np.sqrt(np.maximum(d2, 0.0))
-                d6 = np.floor(d * 1e6 + 0.5) / 1e6
-                # admissibility: outside the exclusion zone, non-flat j
-                idx = np.arange(P)
-                admiss = np.abs(idx[:, None] - idx[None, :]) >= sep
-                admiss &= (varn > 0)[None, :]
-                d6 = np.where(admiss, d6, np.inf)
-                has = admiss.any(axis=1) & (varn > 0)
-                nn = np.where(has, d6.argmin(axis=1), -1).astype(np.int64)
-                best = np.where(has, d6[idx, nn], np.nan)
-                rep.append(P)
-                poss.append(idx.astype(np.int32))
-                nns.append(nn.astype(np.int32))
-                dss.append(best)
-            if not any(rep):
+    def _kernel(views):
+        rep: list[int] = []  # per-input-row output multiplicity
+        poss: list[np.ndarray] = [np.empty(0, dtype=np.int32)]
+        nns: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        dss: list[np.ndarray] = [np.empty(0, dtype=np.float64)]
+        for v in views:
+            if v is None or v.size < w:
+                rep.append(0)
                 continue
-            pos_all = np.concatenate(poss)
-            nn_all = np.concatenate(nns)
-            d_all = np.concatenate(dss)
-            miss = nn_all < 0
-            arrays = [
-                batch.column(c).take(
-                    pa.array(np.repeat(np.arange(len(rep)), rep))
+            x = np.ascontiguousarray(v, dtype=np.int64)
+            amax = float(np.abs(x).max()) if x.size else 0.0
+            if wf * amax * amax > _EXACT_MAX:
+                raise ValueError(
+                    "matrix_profile exact-integer protocol needs "
+                    f"w*max(|token|)^2 <= 2^52; got w={w}, "
+                    f"max|token|={amax:.0f} — rescale the tokens or "
+                    "shrink w"
                 )
-                for c in keep_cols
-            ]
-            arrays.append(pa.array(pos_all, type=pa.int32()))
-            arrays.append(
-                pa.array(
-                    np.where(miss, 0, nn_all).astype(np.int32),
-                    type=pa.int32(),
-                    mask=miss,
-                )
-            )
-            arrays.append(pa.array(d_all, type=pa.float64(), from_pandas=True))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "pos", "nn_idx", "dist"]
-            )
+            P = x.size - w + 1
+            A = np.lib.stride_tricks.sliding_window_view(x, w)
+            # exact int64 sufficient statistics
+            T = A @ A.T
+            S = A.sum(axis=1)
+            Q = (A * A).sum(axis=1)
+            varn = w * Q - S * S  # >= 0
+            num = (w * T - np.outer(S, S)).astype(np.float64)
+            vf = varn.astype(np.float64)
+            den = np.sqrt(vf[:, None] * vf[None, :])
+            with np.errstate(divide="ignore", invalid="ignore"):
+                d2 = two_w * (1.0 - num / den)
+            d = np.sqrt(np.maximum(d2, 0.0))
+            d6 = np.floor(d * 1e6 + 0.5) / 1e6
+            # admissibility: outside the exclusion zone, non-flat j
+            idx = np.arange(P)
+            admiss = np.abs(idx[:, None] - idx[None, :]) >= sep
+            admiss &= (varn > 0)[None, :]
+            d6 = np.where(admiss, d6, np.inf)
+            has = admiss.any(axis=1) & (varn > 0)
+            nn = np.where(has, d6.argmin(axis=1), -1).astype(np.int64)
+            best = np.where(has, d6[idx, nn], np.nan)
+            rep.append(P)
+            poss.append(idx.astype(np.int32))
+            nns.append(nn)
+            dss.append(best)
+        nn_all = np.concatenate(nns)
+        d_all = np.concatenate(dss)
+        return np.repeat(np.arange(len(rep)), rep), [
+            np.concatenate(poss),
+            np.ma.masked_array(nn_all.astype(np.int32), mask=nn_all < 0),
+            np.ma.masked_array(d_all, mask=np.isnan(d_all)),
+        ]
 
-    return src.mapInArrow(_compute, schema)
+    return map_signals(
+        df,
+        keep_cols,
+        [
+            StructField("pos", IntegerType()),
+            StructField("nn_idx", IntegerType()),
+            StructField("dist", DoubleType()),
+        ],
+        _kernel,
+        (array_col,),
+    )

@@ -27,8 +27,8 @@ memory (pre-aggregate long signals to a coarser grain first, or use
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
@@ -36,8 +36,9 @@ from pyspark.sql.types import (
     IntegerType,
     LongType,
     StructField,
-    StructType,
 )
+
+from eristropy_spark.functions.entropy_arrow import map_signals
 
 __all__ = [
     "theilsen_trend",
@@ -71,62 +72,49 @@ def theilsen_trend(
     """(``*keep_cols``, n, slope, intercept) — one row per signal.
     Signals with fewer than 2 points emit NULL slope/intercept (a
     single point determines no line)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if max_points < 2:
         raise ValueError("max_points must be >= 2")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+
+    def _kernel(views):
+        ns: list[int] = []
+        slopes: list[float | None] = []
+        icepts: list[float | None] = []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            if n < 2:
+                slopes.append(None)
+                icepts.append(None)
+                continue
+            if n > max_points:
+                raise ValueError(
+                    f"theilsen_trend: signal has {n} points > "
+                    f"max_points={max_points}; the O(n²) pair matrix "
+                    "would blow task memory — pre-aggregate to a "
+                    "coarser grain or raise max_points explicitly"
+                )
+            x = np.asarray(v, dtype=np.float64)
+            i, j = np.triu_indices(n, k=1)
+            pair_slopes = (x[j] - x[i]) / (j - i).astype(np.float64)
+            pair_slopes.sort(kind="stable")
+            slope = _qcont(pair_slopes, 0.5)
+            resid = x - slope * np.arange(n, dtype=np.float64)
+            resid.sort(kind="stable")
+            slopes.append(slope)
+            icepts.append(_qcont(resid, 0.5))
+        return None, [ns, slopes, icepts]
+
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("n", IntegerType()),
             StructField("slope", DoubleType()),
             StructField("intercept", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            slopes: list[float | None] = []
-            icepts: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < 2:
-                    slopes.append(None)
-                    icepts.append(None)
-                    continue
-                if n > max_points:
-                    raise ValueError(
-                        f"theilsen_trend: signal has {n} points > "
-                        f"max_points={max_points}; the O(n²) pair matrix "
-                        "would blow task memory — pre-aggregate to a "
-                        "coarser grain or raise max_points explicitly"
-                    )
-                x = np.asarray(v, dtype=np.float64)
-                i, j = np.triu_indices(n, k=1)
-                pair_slopes = (x[j] - x[i]) / (j - i).astype(np.float64)
-                pair_slopes.sort(kind="stable")
-                slope = _qcont(pair_slopes, 0.5)
-                resid = x - slope * np.arange(n, dtype=np.float64)
-                resid.sort(kind="stable")
-                slopes.append(slope)
-                icepts.append(_qcont(resid, 0.5))
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(slopes, type=pa.float64()))
-            arrays.append(pa.array(icepts, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "slope", "intercept"]
-            )
-
-    return src.mapInArrow(_compute, schema)
 
 
 def mann_kendall(
@@ -164,78 +152,63 @@ def mann_kendall(
     longer series, or note S is computable in O(n log n) via inversion
     counting if an exact long-series variant is ever needed).
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if max_points < 2:
         raise ValueError("max_points must be >= 2")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+
+    def _kernel(views):
+        ns: list[int] = []
+        ss: list[int | None] = []
+        vs: list[float | None] = []
+        zs: list[float | None] = []
+        taus: list[float | None] = []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            if n < 2:
+                ss.append(None)
+                vs.append(None)
+                zs.append(None)
+                taus.append(None)
+                continue
+            if n > max_points:
+                raise ValueError(
+                    f"mann_kendall: signal has {n} points > "
+                    f"max_points={max_points}; the O(n²) sign matrix "
+                    "would blow task memory — pre-aggregate to a "
+                    "coarser grain or raise max_points explicitly"
+                )
+            x = np.asarray(v)
+            i, j = np.triu_indices(n, k=1)
+            s = int(np.sign(x[j].astype(np.int64) - x[i].astype(np.int64)).sum())
+            _, counts = np.unique(x, return_counts=True)
+            t = counts.astype(np.int64)
+            tie_term = int((t * (t - 1) * (2 * t + 5)).sum())
+            var_s = (n * (n - 1) * (2 * n + 5) - tie_term) / 18.0
+            if s > 0:
+                z = (s - 1) / np.sqrt(var_s) if var_s > 0.0 else None
+            elif s < 0:
+                z = (s + 1) / np.sqrt(var_s) if var_s > 0.0 else None
+            else:
+                z = 0.0 if var_s > 0.0 else None
+            ss.append(s)
+            vs.append(var_s)
+            zs.append(float(z) if z is not None else None)
+            taus.append(s / (n * (n - 1) / 2.0))
+        return None, [ns, ss, vs, zs, taus]
+
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("n", IntegerType()),
             StructField("s", LongType()),
             StructField("var_s", DoubleType()),
             StructField("z", DoubleType()),
             StructField("tau", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            ss: list[int | None] = []
-            vs: list[float | None] = []
-            zs: list[float | None] = []
-            taus: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < 2:
-                    ss.append(None)
-                    vs.append(None)
-                    zs.append(None)
-                    taus.append(None)
-                    continue
-                if n > max_points:
-                    raise ValueError(
-                        f"mann_kendall: signal has {n} points > "
-                        f"max_points={max_points}; the O(n²) sign matrix "
-                        "would blow task memory — pre-aggregate to a "
-                        "coarser grain or raise max_points explicitly"
-                    )
-                x = np.asarray(v)
-                i, j = np.triu_indices(n, k=1)
-                s = int(np.sign(x[j].astype(np.int64) - x[i].astype(np.int64)).sum())
-                _, counts = np.unique(x, return_counts=True)
-                t = counts.astype(np.int64)
-                tie_term = int((t * (t - 1) * (2 * t + 5)).sum())
-                var_s = (n * (n - 1) * (2 * n + 5) - tie_term) / 18.0
-                if s > 0:
-                    z = (s - 1) / np.sqrt(var_s) if var_s > 0.0 else None
-                elif s < 0:
-                    z = (s + 1) / np.sqrt(var_s) if var_s > 0.0 else None
-                else:
-                    z = 0.0 if var_s > 0.0 else None
-                ss.append(s)
-                vs.append(var_s)
-                zs.append(float(z) if z is not None else None)
-                taus.append(s / (n * (n - 1) / 2.0))
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(ss, type=pa.int64()))
-            arrays.append(pa.array(vs, type=pa.float64()))
-            arrays.append(pa.array(zs, type=pa.float64()))
-            arrays.append(pa.array(taus, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "s", "var_s", "z", "tau"]
-            )
-
-    return src.mapInArrow(_compute, schema)
 
 
 def robust_scale(
@@ -329,92 +302,73 @@ def seasonal_mann_kendall(
     every phase emit NULL stats.  ``max_points`` fail-louds the O(n²)
     per-phase pair matrix like :func:`mann_kendall`.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from typing import Iterator as _It
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
     if max_points < 2:
         raise ValueError("max_points must be >= 2")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+
+    def _kernel(views):
+        ns, ss, vs, zs = [], [], [], []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            if n > max_points:
+                raise ValueError(
+                    f"seasonal_mann_kendall: signal has {n} points > "
+                    f"max_points={max_points} — pre-aggregate or raise "
+                    "max_points explicitly"
+                )
+            x = np.asarray(v) if n else np.empty(0, dtype=np.int64)
+            s = 0
+            var_num = 0
+            any_pairs = False
+            for g in range(period):
+                xg = x[g::period]
+                ng = int(xg.size)
+                if ng < 2:
+                    continue
+                any_pairs = True
+                i, j = np.triu_indices(ng, k=1)
+                s += int(
+                    np.sign(xg[j].astype(np.int64) - xg[i].astype(np.int64)).sum()
+                )
+                _, counts = np.unique(xg, return_counts=True)
+                t = counts.astype(np.int64)
+                tie = int((t * (t - 1) * (2 * t + 5)).sum())
+                var_num += ng * (ng - 1) * (2 * ng + 5) - tie
+            if not any_pairs:
+                ss.append(None)
+                vs.append(None)
+                zs.append(None)
+                continue
+            var_s = var_num / 18.0
+            if var_s > 0.0:
+                if s > 0:
+                    z = (s - 1) / math.sqrt(var_s)
+                elif s < 0:
+                    z = (s + 1) / math.sqrt(var_s)
+                else:
+                    z = 0.0
+            else:
+                z = None
+            ss.append(s)
+            vs.append(var_s)
+            zs.append(z)
+        return None, [ns, [period] * len(ns), ss, vs, zs]
+
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("n", IntegerType()),
             StructField("period", IntegerType()),
             StructField("s", LongType()),
             StructField("var_s", DoubleType()),
             StructField("z", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns, ss, vs, zs = [], [], [], []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n > max_points:
-                    raise ValueError(
-                        f"seasonal_mann_kendall: signal has {n} points > "
-                        f"max_points={max_points} — pre-aggregate or raise "
-                        "max_points explicitly"
-                    )
-                x = np.asarray(v) if n else np.empty(0, dtype=np.int64)
-                s = 0
-                var_num = 0
-                any_pairs = False
-                for g in range(period):
-                    xg = x[g::period]
-                    ng = int(xg.size)
-                    if ng < 2:
-                        continue
-                    any_pairs = True
-                    i, j = np.triu_indices(ng, k=1)
-                    s += int(
-                        np.sign(
-                            xg[j].astype(np.int64) - xg[i].astype(np.int64)
-                        ).sum()
-                    )
-                    _, counts = np.unique(xg, return_counts=True)
-                    t = counts.astype(np.int64)
-                    tie = int((t * (t - 1) * (2 * t + 5)).sum())
-                    var_num += ng * (ng - 1) * (2 * ng + 5) - tie
-                if not any_pairs:
-                    ss.append(None)
-                    vs.append(None)
-                    zs.append(None)
-                    continue
-                var_s = var_num / 18.0
-                if var_s > 0.0:
-                    if s > 0:
-                        z = (s - 1) / math.sqrt(var_s)
-                    elif s < 0:
-                        z = (s + 1) / math.sqrt(var_s)
-                    else:
-                        z = 0.0
-                else:
-                    z = None
-                ss.append(s)
-                vs.append(var_s)
-                zs.append(z)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array([period] * len(ns), type=pa.int32()))
-            arrays.append(pa.array(ss, type=pa.int64()))
-            arrays.append(pa.array(vs, type=pa.float64()))
-            arrays.append(pa.array(zs, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "period", "s", "var_s", "z"]
-            )
-
-    return src.mapInArrow(_compute, schema)
 
 
 def hampel_filter(
@@ -451,70 +405,50 @@ def hampel_filter(
     the array row layout, O(n·w log w) per signal; output is long-form
     (one row per point), the shape downstream cleaners consume.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if not 1 <= half_width <= 10_000:
         raise ValueError(f"half_width must be in 1..10000, got {half_width}")
     if not k > 0.0:
         raise ValueError(f"k must be > 0, got {k}")
     w = int(half_width)
     k148 = float(k) * 1.4826
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+
+    def _kernel(views):
+        keep_idx, idxs, xs_o, meds, mads, flags, cleaned = (
+            [], [], [], [], [], [], [],
+        )
+        for row_no, v in enumerate(views):
+            if v is None or v.size == 0:
+                continue
+            xs = np.asarray(v, dtype=np.float64)
+            n = xs.size
+            for i in range(n):
+                lo, hi = max(0, i - w), min(n, i + w + 1)
+                win = np.sort(xs[lo:hi])
+                med = _qcont(win, 0.5)
+                devs = np.sort(np.abs(xs[lo:hi] - med))
+                mad = _qcont(devs, 0.5)
+                dev_i = abs(float(xs[i]) - med)
+                out = dev_i > k148 * mad
+                keep_idx.append(row_no)
+                idxs.append(i)
+                xs_o.append(int(v[i]))
+                meds.append(med)
+                mads.append(mad)
+                flags.append(bool(out))
+                cleaned.append(med if out else float(xs[i]))
+        return keep_idx, [idxs, xs_o, meds, mads, flags, cleaned]
+
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("i", IntegerType()),
             StructField("x", LongType()),
             StructField("med", DoubleType()),
             StructField("mad", DoubleType()),
             StructField("is_outlier", BooleanType()),
             StructField("cleaned", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            keep_idx, idxs, xs_o, meds, mads, flags, cleaned = (
-                [], [], [], [], [], [], [],
-            )
-            for row_no, v in enumerate(views):
-                if v is None or v.size == 0:
-                    continue
-                xs = np.asarray(v, dtype=np.float64)
-                n = xs.size
-                for i in range(n):
-                    lo, hi = max(0, i - w), min(n, i + w + 1)
-                    win = np.sort(xs[lo:hi])
-                    med = _qcont(win, 0.5)
-                    devs = np.sort(np.abs(xs[lo:hi] - med))
-                    mad = _qcont(devs, 0.5)
-                    dev_i = abs(float(xs[i]) - med)
-                    out = dev_i > k148 * mad
-                    keep_idx.append(row_no)
-                    idxs.append(i)
-                    xs_o.append(int(v[i]))
-                    meds.append(med)
-                    mads.append(mad)
-                    flags.append(bool(out))
-                    cleaned.append(med if out else float(xs[i]))
-            arrays = [
-                batch.column(c).take(pa.array(keep_idx, type=pa.int32()))
-                for c in keep_cols
-            ]
-            arrays.append(pa.array(idxs, type=pa.int32()))
-            arrays.append(pa.array(xs_o, type=pa.int64()))
-            arrays.append(pa.array(meds, type=pa.float64()))
-            arrays.append(pa.array(mads, type=pa.float64()))
-            arrays.append(pa.array(flags, type=pa.bool_()))
-            arrays.append(pa.array(cleaned, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                [*keep_cols, "i", "x", "med", "mad", "is_outlier", "cleaned"],
-            )
-
-    return src.mapInArrow(_compute, schema)

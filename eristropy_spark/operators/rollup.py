@@ -46,12 +46,10 @@ def entropy_points(
     """Raw tier: one entropy point per sequence —
     (doc_id, source, ts, sampen, permen).
 
-    Uses the mapInArrow fast path (functions/entropy_arrow.py): the
-    token list column is consumed as zero-copy views over the Arrow
-    values buffer instead of per-row pandas objects — bit-identical to
-    the pandas-UDF path (equivalence-tested) and the default since
-    round 2 (the pandas conversion was the headline-throughput
-    bottleneck in the round-1 scaling ladder).
+    Runs through the engine's one per-signal Arrow boundary
+    (``functions.entropy_arrow.map_signals``): the token list column is
+    consumed as zero-copy views over the Arrow values buffer, and the
+    batch kernels see a whole Arrow batch at once.
     """
     return entropy_points_arrow(
         tokens_df,

@@ -37,10 +37,11 @@ the array row layout, vectorized prefix-sum block math per row.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField
+
+from eristropy_spark.functions.entropy_arrow import map_signals
 
 __all__ = ["wavelet_entropy"]
 
@@ -82,65 +83,48 @@ def wavelet_entropy(
     the largest energy share ``p_dominant``.  Signals with n < 2 or
     zero total detail energy (constant) emit NULL statistics.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if not 1 <= max_level <= 30:
         raise ValueError(f"max_level must be in 1..30, got {max_level}")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
+
+    def _kernel(views):
+        ns, nl, hw, dl, pd_ = [], [], [], [], []
+        for v in views:
+            n = 0 if v is None else int(v.size)
+            ns.append(n)
+            spec = haar_spectrum(v, max_level) if n >= 2 else []
+            nl.append(len(spec))
+            # ascending-k folds mirror the SQL ordered aggregates
+            total = 0.0
+            for _, _, e in spec:
+                total = total + e
+            if not spec or total <= 0.0:
+                hw.append(None)
+                dl.append(None)
+                pd_.append(None)
+                continue
+            h = 0.0
+            best_k, best_e = spec[0][0], spec[0][2]
+            for k, _, e in spec:
+                p = e / total
+                if p > 0.0:
+                    h = h + p * math.log(p)
+                if e > best_e:
+                    best_k, best_e = k, e
+            hw.append(-h)
+            dl.append(best_k)
+            pd_.append(best_e / total)
+        return None, [ns, nl, hw, dl, pd_]
+
+    return map_signals(
+        df,
+        keep_cols,
+        [
             StructField("n", IntegerType()),
             StructField("n_levels", IntegerType()),
             StructField("h_wavelet", DoubleType()),
             StructField("dominant_level", IntegerType()),
             StructField("p_dominant", DoubleType()),
-        ]
+        ],
+        _kernel,
+        (array_col,),
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns, nl, hw, dl, pd_ = [], [], [], [], []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                spec = haar_spectrum(v, max_level) if n >= 2 else []
-                nl.append(len(spec))
-                # ascending-k folds mirror the SQL ordered aggregates
-                total = 0.0
-                for _, _, e in spec:
-                    total = total + e
-                if not spec or total <= 0.0:
-                    hw.append(None)
-                    dl.append(None)
-                    pd_.append(None)
-                    continue
-                h = 0.0
-                best_k, best_e = spec[0][0], spec[0][2]
-                for k, _, e in spec:
-                    p = e / total
-                    if p > 0.0:
-                        h = h + p * math.log(p)
-                    if e > best_e:
-                        best_k, best_e = k, e
-                hw.append(-h)
-                dl.append(best_k)
-                pd_.append(best_e / total)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(nl, type=pa.int32()))
-            arrays.append(pa.array(hw, type=pa.float64()))
-            arrays.append(pa.array(dl, type=pa.int32()))
-            arrays.append(pa.array(pd_, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                [*keep_cols, "n", "n_levels", "h_wavelet",
-                 "dominant_level", "p_dominant"],
-            )
-
-    return src.mapInArrow(_compute, schema)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eristropy_spark.functions.entropy import entropy_struct_udf
+from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
 
 __all__ = ["windowed_entropy"]
 
@@ -91,14 +91,6 @@ def windowed_entropy(
         ).alias("window_id", "wtokens"),
     ).where(F.size("wtokens") >= min_window)
 
-    ent = entropy_struct_udf(
-        F.col("wtokens").cast("array<double>"),
-        F.lit(m),
-        F.lit(float(r)),
-        F.lit(bool(normalize)),
-        F.lit(permen_m),
-        F.lit(permen_delay),
-    )
     ts_cols = []
     if ts_col is not None:
         # epoch-seconds arithmetic keeps sub-second precision and stays
@@ -113,12 +105,21 @@ def windowed_entropy(
                 + F.col("window_id").cast("double") * F.lit(float(stride) * dt)
             ).alias("ts")
         ]
-    return win.select(
+    staged = win.select(
         "doc_id",
         "window_id",
         *ts_cols,
         F.size("wtokens").cast("int").alias("n_tok"),
         *keep_cols,
-        ent["sampen"].alias("sampen"),
-        ent["permen"].alias("permen"),
+        F.col("wtokens").alias("tokens"),
+    )
+    return entropy_points_arrow(
+        staged,
+        m=m,
+        r=r,
+        permen_m=permen_m,
+        permen_delay=permen_delay,
+        normalize=normalize,
+        keep_cols=tuple(staged.columns[:-1]),
+        ts_col=None,
     )

@@ -6,8 +6,10 @@ that must hold for the plan to survive a 100x scale-up:
 
 * parquet scans show ReadSchema pruned to the referenced columns,
 * filters reach the scan (PushedFilters),
-* the entropy projection is ONE Python boundary (a single MapInArrow /
-  ArrowEvalPython) with NO Exchange (zero-shuffle),
+* every entropy projection (entropy_points, compute_entropy,
+  windowed_entropy) is ONE Python boundary (the single MapInArrow of
+  ``functions.entropy_arrow.map_signals``) with NO Exchange
+  (zero-shuffle),
 * tokenize carries exactly one Exchange (the group-by key),
 * the cascade's hour tier reads the cached minute aggregate — never
   re-runs the entropy UDF,
@@ -49,6 +51,7 @@ def audit_checks(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
 
     from eristropy_spark.operators.entropy import compute_entropy
     from eristropy_spark.operators.rollup import cascade, entropy_points
+    from eristropy_spark.operators.windowed import windowed_entropy
     from eristropy_spark.sources.tokens import events_to_tokens, synthesize_tokens
 
     checks: list[tuple[str, bool, str]] = []
@@ -66,15 +69,17 @@ def audit_checks(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     checks.append(("filter pushed to parquet scan", pushed, p))
     checks.append(("scan schema pruned to referenced columns", bool(pruned), p))
 
-    # 2a. pandas-UDF entropy projection: one fused ArrowEvalPython, no shuffle
+    # 2a. compute_entropy and windowed_entropy: one Python boundary, no shuffle
     tok = synthesize_tokens(spark, 1000, seed=1, partitions=8)
-    pts = compute_entropy(tok, m=2, r=0.2, normalize=True)
-    p = plan_of(pts)
-    checks.append(
-        ("entropy (pandas path): exactly one ArrowEvalPython",
-         p.count("ArrowEvalPython") == 1, p)
-    )
-    checks.append(("entropy (pandas path): zero shuffles", "Exchange" not in p, p))
+    for name, pts in (
+        ("compute_entropy", compute_entropy(tok, m=2, r=0.2, normalize=True)),
+        ("windowed_entropy", windowed_entropy(tok, window=64, m=2, r=0.2)),
+    ):
+        p = plan_of(pts)
+        checks.append(
+            (f"{name}: exactly one Python boundary", _py_node_count(p) == 1, p)
+        )
+        checks.append((f"{name}: zero shuffles", "Exchange" not in p, p))
 
     # 2b. default entropy_points (mapInArrow): one Python boundary, no shuffle
     pts_a = entropy_points(tok, m=2, r=0.2)

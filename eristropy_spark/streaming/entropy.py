@@ -11,7 +11,8 @@ last_ts + gap — the group times out, the buffered triples are sorted
 exactly like the batch path (by ts, then event_id), quantized to
 tokens, and ONE entropy point (SampEn + PermEn, same kernels) is
 emitted.  Output rows are therefore directly comparable to the batch
-``compute_entropy`` result — equality is pinned in
+``compute_entropy`` result (the same SampEn/PermEn batch kernels the
+Arrow projection runs) — equality is pinned in
 tests/test_streaming_entropy.py.
 
 Scale properties:

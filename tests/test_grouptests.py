@@ -45,21 +45,29 @@ def _bf_local(pairs):
 
 def test_kruskal_wallis_matches_numpy(spark):
     rng = np.random.default_rng(3)
-    pairs = [
+    small = [
         (f"g{j}", int(v))
         for j, mu in enumerate([0, 8, -4])
         for v in rng.normal(mu, 12, 150).round()
     ]
-    h_ref, hadj_ref = _kw_local(pairs)
-    rows = kruskal_wallis(_df(spark, pairs)).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert r["h"] == pytest.approx(h_ref, rel=1e-6)
-        assert r["h_adj"] == pytest.approx(hadj_ref, rel=1e-6)
-        assert r["n_total"] == len(pairs) and r["k"] == 3
-    # shifted group must carry the larger mean rank
-    by = {r["group"]: r for r in rows}
-    assert by["g1"]["mean_rank"] > by["g0"]["mean_rank"] > by["g2"]["mean_rank"]
+    # 50k rows: R²/n terms reach ~2.5e13, past the 9.22e12 where a
+    # BIGINT floor of x·1e6 saturates
+    large = [
+        (f"g{j}", int(v))
+        for j, mu in enumerate([0, 8, -4, 2, 5])
+        for v in rng.normal(mu, 12, 10_000).round()
+    ]
+    for pairs, k in ((small, 3), (large, 5)):
+        h_ref, hadj_ref = _kw_local(pairs)
+        rows = kruskal_wallis(_df(spark, pairs)).collect()
+        assert len(rows) == k
+        for r in rows:
+            assert r["h"] == pytest.approx(h_ref, rel=1e-6)
+            assert r["h_adj"] == pytest.approx(hadj_ref, rel=1e-6)
+            assert r["n_total"] == len(pairs) and r["k"] == k
+        # shifted group must carry the larger mean rank
+        by = {r["group"]: r for r in rows}
+        assert by["g1"]["mean_rank"] > by["g0"]["mean_rank"] > by["g2"]["mean_rank"]
 
 
 def test_kruskal_wallis_null_under_exchangeability(spark):

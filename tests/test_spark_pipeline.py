@@ -241,35 +241,106 @@ def test_make_stationary_detrend_gp(spark):
     np.testing.assert_array_equal(rows["trendy"], rows2["trendy"])
 
 
-def test_entropy_points_arrow_equals_pandas_path(spark):
+def _entropy_ref(x, m, r, normalize):
+    """(sampen, permen) from the scalar reference kernels; NaN = NULL."""
+    if x is None:
+        return (math.nan, math.nan)
+    x = np.asarray(x, dtype=np.float64)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        z = znorm(x) if normalize and x.size > 1 else x
+        s = sampen_kernel(z, m, r)
+    return (s, permen_kernel(x, 3, 1, normalize=True))
+
+
+def _edge_signals(rng):
+    """Random signals plus NULL, empty, n < m+2 and constant arrays."""
+    sigs = {f"s{i}": rng.integers(-40, 40, size=int(n)) for i, n in
+            enumerate(rng.integers(16, 120, size=30))}
+    sigs.update({
+        "null": None,
+        "empty": np.array([], dtype=np.int64),
+        "n1": np.array([5]),
+        "n2": np.array([5, 7]),
+        "n3": np.array([5, 7, 6]),
+        "const": np.full(40, 3),
+    })
+    return sigs
+
+
+def test_entropy_projections_match_scalar_kernels(spark):
+    """entropy_points / compute_entropy / windowed_entropy equal the
+    scalar reference kernels exactly, on int and double payloads."""
+    for elem in ("int", "double"):
+        _check_entropy_projections(spark, elem)
+
+
+def _check_entropy_projections(spark, elem):
     import datetime as dt
 
-    from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
     from eristropy_spark.operators.rollup import entropy_points
+    from eristropy_spark.operators.windowed import windowed_entropy
 
-    rng = np.random.default_rng(9)
-    base = dt.datetime(2024, 1, 1)
+    sigs = _edge_signals(np.random.default_rng(9))
+    cast = int if elem == "int" else float
     rows = [
-        Row(
-            doc_id=f"s{i}",
-            tokens=[float(v) for v in rng.normal(size=int(n))],
-            n_tok=int(n),
-            source=f"src{i % 2}",
-            first_ts=base,
-        )
-        for i, n in enumerate(rng.integers(16, 120, size=50))
+        (k, None if x is None else [cast(v) for v in x], "srcA",
+         dt.datetime(2024, 1, 1))
+        for k, x in sigs.items()
     ]
-    df = spark.createDataFrame(rows)
-    a = {
-        r["doc_id"]: (r["sampen"], r["permen"])
-        for r in entropy_points_arrow(df, m=2, r=0.2, normalize=True).collect()
+    df = spark.createDataFrame(
+        rows, f"doc_id string, tokens array<{elem}>, source string, "
+        "first_ts timestamp"
+    )
+
+    def check(got, want):
+        assert got.keys() == want.keys()
+        for k in want:
+            np.testing.assert_array_equal(  # NaN-aware, exact
+                np.array(got[k], dtype=np.float64),
+                np.array(want[k], dtype=np.float64),
+                err_msg=str(k),
+            )
+
+    for fn, normalize in (
+        (lambda: entropy_points(df, m=2, r=0.2, normalize=True), True),
+        (lambda: compute_entropy(df, m=2, r=0.2, normalize=True), True),
+        (lambda: compute_entropy(df, m=2, r=3.0), False),
+    ):
+        got = {r["doc_id"]: (r["sampen"], r["permen"]) for r in fn().collect()}
+        check(got, {k: _entropy_ref(x, 2, 0.2 if normalize else 3.0, normalize)
+                    for k, x in sigs.items()})
+
+    win, stride, min_win = 32, 16, 4
+    got = {
+        (r["doc_id"], r["window_id"]): (r["sampen"], r["permen"])
+        for r in windowed_entropy(
+            df, window=win, stride=stride, min_window=min_win, m=2, r=0.2
+        ).collect()
     }
-    b = {
-        r["doc_id"]: (r["sampen"], r["permen"])
-        for r in entropy_points(df, m=2, r=0.2, normalize=True).collect()
-    }
-    assert a.keys() == b.keys()
-    for k in a:
-        got = np.array(a[k], dtype=np.float64)  # None -> nan
-        want = np.array(b[k], dtype=np.float64)
-        np.testing.assert_array_equal(got, want)  # NaN-aware, exact
+    want = {}
+    for k, x in sigs.items():
+        for w in range(0 if x is None else len(x)):
+            piece = x[w * stride : w * stride + win]
+            if len(piece) >= min_win:
+                want[(k, w)] = _entropy_ref(piece, 2, 0.2, True)
+    check(got, want)
+
+
+def test_token_views_over_sliced_chunked_list():
+    import pyarrow as pa
+
+    from eristropy_spark.functions.entropy_arrow import _token_views
+
+    a = pa.array([[1, 2], None, [3], [], [4, 5, 6], None, [7]],
+                 type=pa.list_(pa.int32()))
+    b = pa.array([[8, 9], None, [10, 11, 12]], type=pa.list_(pa.int32()))
+    col = pa.chunked_array([a.slice(1, 5), b.slice(1)])
+    views = _token_views(col)
+    want = col.to_pylist()
+    assert len(views) == len(want) == 7
+    for v, w in zip(views, want):
+        if w is None:
+            assert v is None
+        else:
+            assert v.dtype == np.int32
+            assert v.tolist() == w
